@@ -925,7 +925,16 @@ def minhash_band_pairs_open(
     anti-pattern). Every stage shuffles on band keys or doc ids, never
     materializes doc×doc, and the verify join is sort-merge-able on the
     candidate doc ids.
+
+    ``threshold`` must lie in [0, 1] (0 keeps every banding candidate), and
+    its double-rounding midpoint must fit the exact verify's BIGINT
+    literals, which rules out positive thresholds below about 0.002.
     """
+    if not 0 <= threshold <= 1:
+        raise ValueError(f"jaccard threshold must be in [0, 1], got {threshold!r}")
+    mid = (Fraction(threshold) + Fraction(math.nextafter(threshold, 0.0))) / 2
+    if mid.denominator + mid.numerator >= 2**63:
+        raise ValueError(f"jaccard threshold {threshold!r} is too small to verify exactly")
     r = n_hashes // n_bands
     if tids is None:
         # open vocabulary ⇒ the dictionary must not bottleneck either: the
@@ -1033,7 +1042,6 @@ def minhash_band_pairs_open(
     #     DECIMAL(38,0) products: mid's numerator is ~2^53 and set sizes
     #     are doc-bounded, so BIGINT would overflow past ~1e3-token
     #     docs; decimal stays exact to 38 digits.
-    mid = (Fraction(threshold) + Fraction(math.nextafter(threshold, 0.0))) / 2
     inter_dec = inter.cast("decimal(20,0)")
     sum_dec = (F.col("n_a") + F.col("n_b")).cast("decimal(20,0)")
     jac_ok = (

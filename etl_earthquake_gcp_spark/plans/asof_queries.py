@@ -100,7 +100,15 @@ def asof_purchase_prior_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 def asof_cogroup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    purchases, clicks = _purchases_and_clicks(spark, sf_dir)
+    # Both sides come from one events scan and share attribute ids, so the
+    # cogroup's UDF binds the right side's arguments to the LEFT side's ids;
+    # column pruning under any projection above (count(), hash
+    # materialization) then drops the right side's t_ms. Fresh aliases give
+    # each side ids of its own.
+    purchases, clicks = (
+        df.select(*[F.col(c).alias(c) for c in df.columns])
+        for df in _purchases_and_clicks(spark, sf_dir)
+    )
 
     out_schema = (
         "event_id long, user_id long, t_ms long, "

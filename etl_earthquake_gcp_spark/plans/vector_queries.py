@@ -836,18 +836,20 @@ def _train_blocks_distributed(spark, X, dpb: int, k: int, seed: int):
                 )
                 yield pd.DataFrame({"block": [b], "cb": [C.ravel()]})
 
-    rows = (
-        spark.range(0, n_blocks, 1, n_blocks)
-        .toDF("block")
-        .mapInPandas(train, schema="block long, cb array<double>")
-        # COLLECT: n_blocks × (k·dpb) codebook doubles — fixed-size
-        # quantizer state (8×256×8 ≈ 16k values), never corpus-sized
-        .collect()
-    )
+    try:
+        rows = (
+            spark.range(0, n_blocks, 1, n_blocks)
+            .toDF("block")
+            .mapInPandas(train, schema="block long, cb array<double>")
+            # COLLECT: n_blocks × (k·dpb) codebook doubles — fixed-size
+            # quantizer state (8×256×8 ≈ 16k values), never corpus-sized
+            .collect()
+        )
+    finally:  # a failed job must not leak the sample for the session's life
+        bX.destroy()
     books = np.empty((n_blocks, k, dpb))
     for r in rows:
         books[int(r["block"])] = np.asarray(r["cb"]).reshape(k, dpb)
-    bX.destroy()
     return books
 
 

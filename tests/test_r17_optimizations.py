@@ -49,6 +49,34 @@ def test_open_verify_keeps_rounding_boundary_pair(spark):
     assert row.jaccard == 0.8
 
 
+@pytest.mark.parametrize("threshold", [-0.1, 1.5, float("nan"), 1e-30])
+def test_open_verify_rejects_threshold_outside_range(spark, threshold):
+    """Thresholds outside [0, 1], and positive ones too small for the
+    verify's BIGINT midpoint literals, are refused at plan-build time.
+    (0 is accepted: minhash_candidate_quality uses it to keep every
+    candidate, and its parity test covers it.)"""
+    from etl_earthquake_gcp_spark.operators.dedup import minhash_band_pairs_open
+
+    tids = spark.createDataFrame([(1, 10)], "doc_id long, tid long")
+    with pytest.raises(ValueError, match="threshold"):
+        minhash_band_pairs_open(tids=tids, threshold=threshold)
+
+
+def test_open_verify_accepts_threshold_one(spark):
+    """threshold=1.0 is the top of the range: only identical sets pair."""
+    from etl_earthquake_gcp_spark.operators.dedup import minhash_band_pairs_open
+
+    tids = spark.createDataFrame(
+        [(d, t) for d in (1, 2) for t in (10, 20, 30, 40)]
+        + [(3, t) for t in (10, 20, 30, 60)],
+        "doc_id long, tid long",
+    )
+    out = minhash_band_pairs_open(
+        tids=tids, n_hashes=4, n_bands=1, threshold=1.0, seed=42
+    ).collect()
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in out] == [(1, 2, 1.0)]
+
+
 @pytest.mark.parametrize("threshold", [0.8, 0.5, 0.9, 1.0, 2 / 3])
 def test_midpoint_filter_matches_double_comparison(threshold):
     """(den+num)*i >= num*U with num/den = the rounding midpoint of the

@@ -173,3 +173,42 @@ def test_asof_nearest_null_value_column_same_row(spark):
     ).collect()[0]
     assert (row.nearest_click_id, row.nearest_click_value) == (11, None)
     assert row.nearest_dist_ms == 100 and row.nearest_dir == "prev"
+
+
+def _hash_and_count(df):
+    """bench.py's materialization with a row count in the same aggregate."""
+    row = df.select(F.xxhash64(F.struct(*df.columns)).alias("h")).agg(
+        F.expr("bit_xor(h)").alias("x"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    return row["x"], row["n"]
+
+
+def test_actions_agree_on_rows(spark):
+    """toPandas, count(), hash materialization and a noop write must see
+    the same frame. The cogroup as-of query once failed under count() and
+    hash materialization (column pruning dropped the right side's t_ms);
+    its hash must also equal the union-sort query's, which shares its
+    oracle and output schema."""
+    from bench import materialize
+    from etl_earthquake_gcp_spark.plans import QUERIES
+
+    from .conftest import SF_DIR
+
+    hashes = {}
+    for name in (
+        "asof_cogroup_pandas",
+        "asof_purchase_prior_click",
+        "pricing_summary",
+        "latest_event_dedup",
+    ):
+        def build():
+            return QUERIES[name].spark_fn(spark, SF_DIR)
+
+        n = len(build().toPandas())
+        assert n > 0, name
+        assert build().count() == n, name
+        materialize(build())
+        hashes[name], n_hashed = _hash_and_count(build())
+        assert n_hashed == n, name
+        build().write.format("noop").mode("overwrite").save()
+    assert hashes["asof_cogroup_pandas"] == hashes["asof_purchase_prior_click"]

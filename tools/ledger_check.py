@@ -27,7 +27,12 @@ Usage:
     python tools/ledger_check.py --verify-current
         # recompute the upcoming round's head from the ledger alone and
         # diff it against plans/__init__.py::_DRIVER_PRIORITY[:50];
-        # exit nonzero on any mismatch.
+        # exit nonzero on any mismatch. The exit code means something
+        # only at registration time, BEFORE that round's CORRECTNESS
+        # file lands: the recomputed head always includes the pending
+        # NEW/REWORK names, so once their correctness rows are recorded it
+        # differs from the registered head and the mode exits 1 by
+        # construction, not because of a registration error.
 """
 
 from __future__ import annotations
